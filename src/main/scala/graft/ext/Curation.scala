@@ -92,10 +92,10 @@ object Curation {
     *
     * Cache discipline: the shingle/band frames persisted inside
     * [[Dedup.nearDuplicates]] are fully consumed once
-    * [[Dedup.duplicateClusters]] converges (it is eager — the cluster labels
-    * come back checkpointed), so they are released HERE, before returning.
-    * The final label checkpoint is still read lazily by the returned frames,
-    * so its ownership passes to the caller's `scope` (null → it stays
+    * [[Dedup.duplicateClusters]] converges (its rounds run eagerly and end
+    * in a checkpointed edge set), so they are released HERE, before
+    * returning. The cluster labels still read that checkpoint lazily, so
+    * its ownership passes to the caller's `scope` (null → it stays
     * persisted, the pre-scope behavior). */
   private def stages(docs: DataFrame, idCol: String, textCol: String,
                      cfg: Config, scope: CacheScope)

@@ -858,7 +858,7 @@ object Dedup {
     * equi-joins keyed on the position plus one distinct + global
     * order-index over the (rank, rank+2^t) pairs; every round's output is
     * localCheckpoint-materialized so lineage stays CONSTANT per round (the
-    * [[connectedComponentsStar]] iteration discipline — without it the
+    * [[duplicateClusters]] iteration discipline — without it the
     * plan doubles per round and the optimizer, not the data, becomes the
     * bottleneck). Run to ⌈log₂ n⌉ rounds for a full suffix array; stop at
     * ⌊log₂ L⌋ for length-L window equality (what substring dedup needs).
@@ -1046,7 +1046,7 @@ object Dedup {
     // Failure anywhere between a round's persist and the happy-path return
     // must release the current round AND the in-flight RDD, or
     // corpus-character-sized caches leak in a long-lived session (the
-    // [[connectedComponentsStar]] discipline).
+    // [[duplicateClusters]] discipline).
     try {
       val fst = cp.eagerCheckpoint(
         chars.select(col("gpos"), col("code").as("rank")))
@@ -1079,13 +1079,19 @@ object Dedup {
   }
 
   /** Per-call state for the checkpoint-iteration discipline shared by the
-    * iterative operators ([[duplicateClusters]], [[connectedComponentsStar]],
-    * [[prefixDoubleRanks]]): each round's frame is materialized as a
-    * persisted + localCheckpoint'd InternalRow RDD (lineage stays CONSTANT
-    * per round), and the RDD currently being materialized is tracked in
-    * `pending` so a failure ANYWHERE between persist and ownership transfer
-    * still finds it in the operator's catch block. One instance per call —
-    * never shared across threads. */
+    * iterative operators ([[duplicateClusters]], [[prefixDoubleRanks]]):
+    * each round's frame is materialized as a persisted + localCheckpoint'd
+    * InternalRow RDD (lineage stays CONSTANT per round), and the RDD
+    * currently being materialized is tracked in `pending` so a failure
+    * ANYWHERE between persist and ownership transfer still finds it in the
+    * operator's catch block. The operator holds a DIRECT handle to each
+    * RDD: `Dataset.localCheckpoint` persists an internal RDD the API
+    * exposes no handle to, and recovering it by diffing the persistent-RDD
+    * registry could claim (and later free) caches persisted concurrently
+    * by other jobs in a shared session. `queryExecution.toRdd` may reuse
+    * row buffers, so rows are copied before caching. (Use reliable
+    * checkpointing on a real cluster: a local checkpoint dies with its
+    * executor.) One instance per call — never shared across threads. */
   private[ext] object CheckpointRounds {
     type IRdd =
       org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]
@@ -1577,119 +1583,16 @@ object Dedup {
     * over the pair graph, labeling every member with the minimum id in its
     * component (the canonical survivor). This is the step pairwise dedup
     * pipelines forget — without it, A≈B and B≈C dedup to two survivors.
+    * Returns one (id, rep) row per node of the graph. A self-pair (a, a)
+    * is not an edge, so a node seen only in one gets no row.
     *
-    * Iterative min-label propagation with pointer jumping: each round (a)
-    * takes the min label across edges, then (b) compresses rep → label(rep),
-    * so label distances roughly halve per round — O(log diameter) rounds,
-    * each one shuffle, no driver-side graph. Throws if `maxIter` rounds
-    * don't converge (silently-wrong clusters would under-dedup). */
-  def duplicateClusters(pairs: DataFrame, aCol: String = "a_id",
-                        bCol: String = "b_id", maxIter: Int = 20,
-                        scope: CacheScope = null): DataFrame = {
-    val spark = pairs.sparkSession
-    // Each round's labels frame is materialized as an RDD[InternalRow] this
-    // method holds a DIRECT handle to: persisting + localCheckpoint-ing that
-    // handle truncates lineage (the label self-join would otherwise double
-    // the logical plan every round until planning itself OOMs after ~8
-    // rounds), and the handle lets the superseded round be unpersisted
-    // precisely. Checkpointing queryExecution.toRdd (InternalRow, via the
-    // graftbridge) skips the InternalRow→Row deserialize + re-serialize
-    // round trip `df.rdd`/`createDataFrame` would pay per round; toRdd may
-    // reuse row buffers, so rows are copied before caching.
-    // Dataset.localCheckpoint would persist an internal RDD the API exposes
-    // no handle to — recovering it via a persistent-RDD-registry diff can
-    // claim (and later free) caches persisted concurrently by other jobs in
-    // a shared session, so it is deliberately avoided here. Safe under
-    // concurrent use. (Use reliable checkpointing on a real cluster: a
-    // local checkpoint dies with its executor.)
-    // The shared checkpoint-iteration discipline: cp.pending is the RDD
-    // currently being materialized, cleared once `labelRdd` owns it — so a
-    // failure ANYWHERE between persist and ownership transfer (the count,
-    // the changed-count join) still finds it in the catch block below.
-    val cp = new CheckpointRounds(spark)
-    // undirected edge list, both directions
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels: DataFrame = null
-    var labelRdd: CheckpointRounds.IRdd = null
-    var changed = 1L
-    var iter = 0
-    // Any exit before the happy-path return — non-convergence below, or a
-    // failure inside a round — must release the persisted edges, the
-    // current round's labels, AND a freshly persisted not-yet-owned RDD,
-    // or they leak in a long-lived session.
-    try {
-      val first = cp.eagerCheckpoint(
-        edges.select(col("src").as("id")).distinct()
-          .select(col("id"), col("id").as("rep")))
-      labels = first._1
-      labelRdd = first._2
-      cp.pending = null
-      while (changed > 0 && iter < maxIter) {
-        val lab = labels.select(col("id"), col("rep"))
-        // (a) candidate label for each node: min of own and neighbors'
-        // labels — the PREVIOUS label rides along so the round's frame can
-        // carry its own convergence flag (no separate count-join query)
-        val viaEdges = edges
-          .join(lab.withColumnRenamed("id", "dst").withColumnRenamed("rep", "nrep"), "dst")
-          .groupBy(col("src").as("id")).agg(min(col("nrep")).as("mrep"))
-          .join(lab, "id")
-          .select(col("id"), col("rep").as("_old"),
-            least(col("rep"), col("mrep")).as("rep"))
-        // (b) pointer jump: rep → label(rep) (labels only shrink, so the
-        // looked-up label is never worse than the current one). ONE fresh
-        // jump only: a second jump would self-join the candidate frame
-        // again, and exchange reuse does not fire across the differently-
-        // keyed sides, so the whole propagation subtree would execute 4×
-        // per round (measured: rounds do not halve, wall time rises).
-        val j1 = viaEdges
-          .join(viaEdges.select(col("id").as("rep"), col("rep").as("rep2")), "rep")
-          .select(col("id"), col("rep2").as("rep"),
-            (col("rep2") =!= col("_old")).as("_chg"))
-        val (next, nextRdd, _, nChanged) = cp.eagerCheckpointFlagCount(j1, 2)
-        changed = nChanged
-        labelRdd.unpersist(false) // previous round, fully superseded
-        labels = next
-        labelRdd = nextRdd
-        cp.pending = null // ownership transferred to labelRdd
-        iter += 1
-      }
-      require(changed == 0,
-        s"duplicateClusters did not converge in $maxIter rounds — raise maxIter")
-    } catch {
-      case t: Throwable =>
-        edges.unpersist(false)
-        if (labelRdd != null) labelRdd.unpersist(false)
-        cp.releasePendingUnless(labelRdd)
-        throw t
-    }
-    edges.unpersist(false) // final labels are materialized — lineage done
-    if (scope != null) scope.ownRdds(Seq(labelRdd))
-    // post-round frames carry the internal _old/_chg bookkeeping columns;
-    // the contract (and every caller) is exactly (id, rep)
-    labels.select(col("id"), col("rep"))
-  }
-
-  /** Connected components by LARGE-STAR / SMALL-STAR alternation (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * the O(log n)-round twin of [[duplicateClusters]]'s min-label
-    * propagation, and the published algorithm of record for web-scale
-    * graphs. Same contract: one (id, rep) row per node appearing in
-    * `pairs`, rep = the component's minimum id.
-    *
-    * Why a second algorithm for the same answer: label propagation carries
-    * a LABEL TABLE through every round — each iteration joins the full
-    * edge list against the full label frame, so per-round shuffle is
-    * O(E + V) however close to converged the graph is. The star operations
-    * rewrite the EDGE LIST itself toward its fixpoint (every component a
-    * star centered on its minimum): per-round shuffle is the current edge
-    * set, which collapses as components resolve, and convergence is
-    * O(log n) rounds on any topology — a long-path topology (web redirect
-    * chains, linked near-dup spans) costs label propagation rounds
-    * proportional to log(diameter) with its pointer-jump, each at full
-    * O(E + V) width, where the star rounds shrink with the work remaining.
+    * Algorithm: LARGE-STAR / SMALL-STAR alternation (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014). The
+    * rounds rewrite the EDGE LIST itself toward its fixpoint (every
+    * component a star centered on its minimum), so per-round shuffle is
+    * the current edge set, which collapses as components resolve, and
+    * convergence takes O(log n) rounds on any topology — long chains
+    * (redirect chains, chaining perceptual-hash graphs) included.
     *
     * One round is two halves over the symmetrized neighbor view:
     *  - LARGE-STAR: every node u links each LARGER neighbor v to
@@ -1701,23 +1604,32 @@ object Dedup {
     * Both emit (bigger, smaller) pairs only, so the edge set stays
     * canonical; the fixpoint (edge set unchanged by a full round) is
     * exactly the star forest, checked here structurally (a rep never
-    * appears as a member) before labels are emitted.
+    * appears as a member) before labels are emitted. Throws if `maxIter`
+    * rounds don't converge (silently-wrong clusters would under-dedup).
     *
-    * Scale shape: per half-round, one hash aggregation keyed on the node
-    * (the per-node minimum) and one join keyed on the node — no label
-    * table, no window, no driver-side graph. Every round's edge frame is
-    * materialized via the same InternalRow checkpoint discipline as
-    * [[duplicateClusters]] (lineage would otherwise double per round), the
-    * superseded round released immediately. */
-  def connectedComponentsStar(pairs: DataFrame, aCol: String = "a_id",
-                              bCol: String = "b_id", maxIter: Int = 30,
-                              scope: CacheScope = null): DataFrame = {
+    * Scale shape: each half-round is one window partitioned by the node
+    * (the per-node neighbor minimum: one exchange, and partitions spill),
+    * where an aggregation joined back would exchange the edge set twice.
+    * No label table, no driver-side graph. Each round's edge frame is
+    * materialized through [[CheckpointRounds]] (lineage stays constant per
+    * round; the superseded round is released immediately), and the
+    * fixpoint test rides that same pass: the round's edges are left-joined
+    * against the previous round's, and the materializing job also counts
+    * the edges the previous set lacks — no separate count job per round.
+    *
+    * The returned labels read the final checkpoint lazily: pass a `scope`
+    * and close it after the consuming action (null → the checkpoint stays
+    * persisted). */
+  def duplicateClusters(pairs: DataFrame, aCol: String = "a_id",
+                        bCol: String = "b_id", maxIter: Int = 30,
+                        scope: CacheScope = null): DataFrame = {
     val spark = pairs.sparkSession
     val cp = new CheckpointRounds(spark)
     // symmetric neighbor view of a canonical (x > y) edge frame
     def nbrs(e: DataFrame): DataFrame =
       e.select(col("x").as("u"), col("y").as("v"))
         .unionByName(e.select(col("y").as("u"), col("x").as("v")))
+    val byNode = org.apache.spark.sql.expressions.Window.partitionBy("u")
     var edges: DataFrame = null
     var edgeRdd: CheckpointRounds.IRdd = null
     var edgeCount = -1L
@@ -1731,33 +1643,39 @@ object Dedup {
       edges = first._1; edgeRdd = first._2; edgeCount = first._3
       cp.pending = null
       while (!converged && iter < maxIter) {
-        // LARGE-STAR: (v, m(u)) for every neighbor v > u
-        val s = nbrs(edges)
-        val m = s.groupBy(col("u")).agg(min(col("v")).as("_mv"))
-          .select(col("u"), least(col("u"), col("_mv")).as("m"))
-        val large = s.where(col("v") > col("u")).join(m, "u")
+        // LARGE-STAR: (v, m(u)) for every neighbor v > u (duplicates are
+        // harmless: the small-star half ends in a distinct)
+        val large = nbrs(edges)
+          .select(col("u"), col("v"),
+            least(col("u"), min(col("v")).over(byNode)).as("m"))
+          .where(col("v") > col("u"))
           .select(col("v").as("x"), col("m").as("y"))
-          .where(col("x") =!= col("y")).distinct()
+          .where(col("x") =!= col("y"))
         // SMALL-STAR over the large-star output: every node with smaller
         // neighbors links them — and itself — to the minimum one
         val s1 = nbrs(large).where(col("v") < col("u"))
-        val ms = s1.groupBy(col("u")).agg(min(col("v")).as("m"))
-        val small = s1.join(ms, "u")
-          .select(col("v").as("x"), col("m").as("y"))
-          .unionByName(ms.select(col("u").as("x"), col("m").as("y")))
+          .select(col("u"), col("v"), min(col("v")).over(byNode).as("m"))
+        val small = s1.select(col("v").as("x"), col("m").as("y"))
+          .unionByName(s1.select(col("u").as("x"), col("m").as("y")))
           .where(col("x") =!= col("y")).distinct()
-        val (next, nextRdd, nextCount) = cp.eagerCheckpoint(small)
-        // fixpoint test: same canonical edge SET as last round — set sizes
-        // equal and their distinct union no larger
-        converged = nextCount == edgeCount &&
-          next.unionByName(edges).distinct().count() == nextCount
+        // each edge carries whether the previous round lacked it, so the
+        // materializing pass also counts the new edges
+        val flagged = small
+          .join(edges.select(col("x"), col("y"), lit(true).as("_old")),
+            Seq("x", "y"), "left")
+          .select(col("x"), col("y"), col("_old").isNull.as("_new"))
+        val (next, nextRdd, nextCount, nNew) =
+          cp.eagerCheckpointFlagCount(flagged, 2)
+        // fixpoint test: both edge sets are distinct, so equal sizes and
+        // no new edge is exact set equality
+        converged = nextCount == edgeCount && nNew == 0
         edgeRdd.unpersist(false)
         edges = next; edgeRdd = nextRdd; edgeCount = nextCount
         cp.pending = null
         iter += 1
       }
       require(converged,
-        s"connectedComponentsStar did not converge in $maxIter rounds — raise maxIter")
+        s"duplicateClusters did not converge in $maxIter rounds — raise maxIter")
       // structural star check: at the fixpoint no rep is also a member
       require(edges.select(col("y")).distinct()
           .join(edges.select(col("x")).distinct(),

@@ -1628,13 +1628,7 @@ object Multimodal {
     if (scope != null) scope.own(fp)
     val pairs = graft.ext.Dedup.hammingPairs64(fp, "asset_id", "dhash",
       maxHamming, scope)
-    // star CC, not label propagation: the dhash graph chains (noise-twin
-    // links compose across scenes — measured diameter ≥ 25 at sf0.1), and
-    // label propagation pays O(diameter) materialized rounds at full
-    // O(E + V) width each, where large/small-star converges in O(log n)
-    // rounds on any topology with per-round cost that SHRINKS as
-    // components resolve. Identical (id, rep=min) contract, spec-pinned.
-    val cc = graft.ext.Dedup.connectedComponentsStar(pairs, scope = scope)
+    val cc = graft.ext.Dedup.duplicateClusters(pairs, scope = scope)
       .select(col("id").as("asset_id"), col("rep"))
     val out = fp.join(cc, Seq("asset_id"), "left")
       .select(col("asset_id"),
@@ -1708,13 +1702,12 @@ object Multimodal {
           .select(col("batch_id").as("asset_id")).distinct()
         val fresh = fp.join(hits, Seq("asset_id"), "left_anti")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // owns the cluster checkpoint, which the export reads lazily
+        val ccScope = new CacheScope
         try {
           val pairs = graft.ext.Dedup.hammingPairs64(fresh, "asset_id",
             "dhash", maxHamming)
-          // star CC for the same reason as imageDedupSurvivors: the dhash
-          // graph chains, and O(log n) star rounds beat O(diameter) label
-          // propagation; identical (id, rep=min) contract
-          val cc = graft.ext.Dedup.connectedComponentsStar(pairs)
+          val cc = graft.ext.Dedup.duplicateClusters(pairs, scope = ccScope)
             .select(col("id").as("asset_id"), col("rep"))
           val survivors = fresh.join(cc, Seq("asset_id"), "left")
             .where(coalesce(col("rep"), col("asset_id")) === col("asset_id"))
@@ -1730,7 +1723,7 @@ object Multimodal {
           // action has run by the time the finallys release the pins
           graft.etl.Tar.writeWebdataset(exported, "asset_id", "parts",
             outDir, nShards)
-        } finally fresh.unpersist(): Unit
+        } finally { ccScope.close(); fresh.unpersist() }
       } finally fp.unpersist(): Unit
     } finally stemmed.unpersist(): Unit
   }

@@ -630,10 +630,9 @@ object Sampling {
     * itself, so two near-duplicates can never straddle the boundary — the
     * classic eval-contamination hole of per-document splits (a test doc
     * whose near-twin sits in train leaks the answer). `clusters` is the
-    * (id, rep) labeling from [[Dedup.duplicateClusters]] /
-    * [[Dedup.connectedComponentsStar]]; documents absent from it (the
-    * un-duplicated majority) are their own singleton cluster, so the split
-    * fraction still governs the whole corpus. Adds `rep` (the effective
+    * (id, rep) labeling from [[Dedup.duplicateClusters]]; documents
+    * absent from it (the un-duplicated majority) are their own singleton
+    * cluster, so the split fraction still governs the whole corpus. Adds `rep` (the effective
     * cluster key) and `outCol`.
     *
     * Scale shape: one equi-join against the cluster labeling — which holds

@@ -515,8 +515,8 @@ class PlanSpec extends SparkSpec {
 
   test("sample_split_leakage_safe: one labeling join, no product anywhere") {
     val p = plan("sample_split_leakage_safe")
-    // reachability runs eagerly inside duplicateClusters; the FINAL plan is
-    // documents joined once against the (id, rep) labeling + the hash
+    // the star rounds run eagerly inside duplicateClusters; the FINAL plan
+    // is documents joined once against the (id, rep) labeling + the hash
     // projection — no product of any kind, and exactly one labeling join
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"no product may appear in the split plan:\n$p")

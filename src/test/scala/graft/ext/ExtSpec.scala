@@ -195,9 +195,29 @@ class ExtSpec extends SparkSpec {
       "1_exact_dedup" -> 3L, "2_neardup_dedup" -> 3L, "3_quality_gate" -> 3L))
   }
 
-  test("duplicateClusters converges on a long chain (pointer jumping)") {
-    // 40-node chain: plain one-hop propagation needs 39 rounds; with
-    // pointer jumping it must fit the default maxIter
+  /** Plain-Scala union-find reference for connected components: every
+    * node of a non-self pair mapped to its component's minimum id (a root
+    * is always attached under the smaller root, so roots are minima). */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs if a != b) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def clusterMap(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    Dedup.duplicateClusters(pairs.toDF("a_id", "b_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("duplicateClusters converges on a long chain within the default maxIter") {
+    // 40-node chain: one-hop propagation would need 39 rounds; the star
+    // rounds must fit the default maxIter
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val labels = Dedup.duplicateClusters(chain)
       .select("rep").as[Long].collect().toSet
@@ -212,7 +232,7 @@ class ExtSpec extends SparkSpec {
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("connectedComponentsStar equals label propagation on adversarial graphs") {
+  test("duplicateClusters equals union-find on adversarial and random graphs") {
     val rnd = new scala.util.Random(11)
     // long path (diameter stress) + two bridged cliques + random noise
     // edges + an isolated pair + star already centered on its max id
@@ -225,30 +245,41 @@ class ExtSpec extends SparkSpec {
       (3000L + rnd.nextInt(40), 3000L + rnd.nextInt(40)))
       .filter { case (a, b) => a != b }
     val starMax = (1L to 5L).map(i => (9000L, 9000L - i)) // hub = max id
-    val pairs = (path ++ cliques ++ bridge ++ noise ++ Seq((7000L, 7001L)) ++
-      starMax).toDF("a_id", "b_id")
-    val viaStar = Dedup.connectedComponentsStar(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = Dedup.duplicateClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar === viaProp)
-    assert(viaStar(163L) === 100L) // far path end labeled with the path min
-    assert(viaStar(2005L) === 1000L) // bridged cliques share one component
+    val adversarial = path ++ cliques ++ bridge ++ noise ++
+      Seq((7000L, 7001L)) ++ starMax
+    val got = clusterMap(adversarial)
+    assert(got === unionFindLabels(adversarial))
+    assert(got(163L) === 100L) // far path end labeled with the path min
+    assert(got(2005L) === 1000L) // bridged cliques share one component
+    // seeded random graphs (self-pairs included): a sparse forest of small
+    // components, a dense clump, and a long path under a random id order
+    val g = new scala.util.Random(29)
+    val sparse = Seq.fill(150)((g.nextInt(200).toLong, g.nextInt(200).toLong))
+    val dense = Seq.fill(300)(
+      (1000L + g.nextInt(60), 1000L + g.nextInt(60)))
+    val perm = g.shuffle((5000L until 5120L).toVector)
+    val shuffledPath = perm.zip(perm.tail)
+    for (ps <- Seq(sparse, dense, shuffledPath))
+      assert(clusterMap(ps) === unionFindLabels(ps))
   }
 
-  test("connectedComponentsStar: scope owns the fixpoint; non-convergence throws") {
+  test("duplicateClusters: scope owns the fixpoint; non-convergence throws") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id")
     val scope = new CacheScope
-    val got = Dedup.connectedComponentsStar(pairs, scope = scope)
+    val got = Dedup.duplicateClusters(pairs, scope = scope)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     scope.close()
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    assert(leaked.isEmpty, s"scope.close() left cached RDD ids: $leaked")
     // a 16-node path cannot reach its star fixpoint in one round
     val long = (1L until 16L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponentsStar(long, maxIter = 1).collect()
+      Dedup.duplicateClusters(long, maxIter = 1).collect()
     }
     assert(e.getMessage.contains("converge"))
+    assert(leaked.isEmpty, s"the failed call left cached RDD ids: $leaked")
   }
 
   test("nearDuplicatesFast: pair set AND jaccards equal the portable md5 path") {
@@ -3489,9 +3520,16 @@ class ExtSpec extends SparkSpec {
       graft.etl.Tar.archive(members))).toDS()
     val outDir =
       java.nio.file.Files.createTempDirectory("graft-e2e-out").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val census = Multimodal.webdatasetDedupExport(shards, storeDir, outDir,
         nShards = 2)
       .as[(Int, Long, String)].collect().toSeq
+    // one export leaves no persisted RDD behind (the cluster checkpoint
+    // included); self-releasing intermediates ride the async listener bus
+    val deadline = System.nanoTime() + 10e9.toLong
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(leaked.isEmpty, s"the export leaked cached RDD ids: $leaked")
     // read the delivered corpus back
     val back = new java.io.File(outDir).listFiles()
       .filter(_.getName.endsWith(".tar")).sortBy(_.getName)
